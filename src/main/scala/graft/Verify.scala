@@ -1,138 +1,78 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Harness
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    val timeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "600").toLong
-    val pool = java.util.concurrent.Executors.newCachedThreadPool()
-    // Session confs that query functions legitimately mutate (StreamRunner
-    // pins shuffle partitions; q_stream_transform swaps the state-store
-    // provider). Their finally blocks restore them on the normal path, but
-    // a timed-out pool thread may stay parked inside a non-interruptible
-    // Spark call, so re-pin after every query — same guard as Bench.
-    val guardedConfs = Seq(
-      "spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-    val confBaseline: Map[String, Option[String]] =
-      guardedConfs.map(k => k -> spark.conf.getOption(k)).toMap
-    def restoreConfs(): Unit = confBaseline.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    // One hung query must not stall the whole correctness dump: the guard
+    // runs each query under a hard timeout; the query is reported failed
+    // and the dump continues.
+    val guard = new Harness.Guard(spark, Harness.queryTimeout(600))
     def deleteRecursively(f: java.io.File): Unit = {
       val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRecursively)
       f.delete(); ()
     }
-    // One hung query must not stall the whole correctness dump: hard
-    // per-query timeout with job-group cancellation (same protection as
-    // Bench); the query is reported failed and the dump continues.
-    // Dev-loop filter: SPARK_GRAFT_QUERIES=q_a,q_b runs (and declares
-    // oracles for) just those queries, so tools/check_oracle.py can gate a
-    // subset without flagging the rest as missing. Unset = full dump (the
-    // driver's mode).
     // Failure manifest: a query that throws or times out loses its output
     // dir and silently drops out of the driver's CORRECTNESS artifact — a
     // shrinking query set would read as all-green. Record every failure
     // here and persist VERIFY_FAILURES.json (empty object on a healthy
     // run) so regressions are always visible.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    // Dev-loop filter: SPARK_GRAFT_QUERIES=q_a,q_b runs (and declares
+    // oracles for) just those queries, so tools/check_oracle.py can gate a
+    // subset without flagging the rest as missing.
+    val selected = Harness.selected(SparkEntry.queries)
     selected.foreach { case (name, fn) =>
       // Delete the previous run's output FIRST: mode("overwrite") only
       // clears it once the write job starts, so a query that fails in
       // planning would leave stale rows for the checker to hash as a
       // phantom PASS.
       deleteRecursively(new java.io.File(s"$outDir/$name"))
-      // The task writes to a hidden in-flight dir and publishes (renames)
+      // The run writes to a hidden in-flight dir and publishes (renames)
       // into place under a lock, only if the main loop hasn't already
       // reported the query failed. Without this, a thread parked in a
       // non-interruptible Spark call could finish its write AFTER the
-      // timeout branch deleted the output dir, re-creating output for a
+      // failure branch deleted the output dir, re-creating output for a
       // query reported failed — the checker would hash a late result as
       // a phantom pass.
       val inflight = s"$outDir/.inflight_$name"
       deleteRecursively(new java.io.File(inflight))
       val abandoned = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val task = pool.submit(new Runnable {
-        override def run(): Unit = {
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          try {
-            // Canonicalize signed zero at the gate: DuckDB's round() can
-            // emit -0.0 where Spark emits +0.0 (equal values, different
-            // hashes) — collapse to unsigned so the class can't recur.
-            graft.engine.Canon.normalizeNegZero(fn(spark, sfDir))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(inflight)
-            abandoned.synchronized {
-              if (abandoned.get) deleteRecursively(new java.io.File(inflight))
-              else Files.move(Paths.get(inflight), Paths.get(s"$outDir/$name"))
-            }
-          } finally spark.sparkContext.clearJobGroup()
+      guard.run(name) {
+        // Canonicalize signed zero at the gate: DuckDB's round() can
+        // emit -0.0 where Spark emits +0.0 (equal values, different
+        // hashes) — collapse to unsigned so the class can't recur.
+        graft.engine.Canon.normalizeNegZero(fn(spark, sfDir))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(inflight)
+        abandoned.synchronized {
+          if (abandoned.get) deleteRecursively(new java.io.File(inflight))
+          else Files.move(Paths.get(inflight), Paths.get(s"$outDir/$name"))
         }
-      })
-      try task.get(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          // Mark abandoned FIRST (under the publish lock) so a write that
-          // completes from here on discards itself instead of publishing.
-          abandoned.synchronized { abandoned.set(true) }
-          spark.sparkContext.cancelJobGroup(name)
-          // streams run under their own job group on their own thread —
-          // stop them explicitly or an orphaned stream starves the rest
-          spark.streams.active.foreach { q =>
-            try q.stop() catch { case _: Throwable => () }
-          }
-          task.cancel(true)
-          // covers a publish that raced between get() timing out and the
-          // abandon mark above: reported-failed must mean no output dir
-          deleteRecursively(new java.io.File(s"$outDir/$name"))
-          failures(name) = s"timeout ${timeoutSec}s"
-          System.err.println(s"[verify] $name failed: timeout ${timeoutSec}s")
-        case e: Throwable =>
-          val cause = Option(e.getCause).getOrElse(e)
+      } match {
+        case Right(_) => ()
+        case Left(cause) =>
+          // Mark abandoned under the publish lock, so a write that
+          // completes from here on discards itself; then delete whatever
+          // published before the mark: reported-failed must mean no
+          // output dir.
           abandoned.synchronized { abandoned.set(true) }
           deleteRecursively(new java.io.File(s"$outDir/$name"))
           deleteRecursively(new java.io.File(inflight))
-          val msg = s"${cause.getClass.getSimpleName}: " +
-            String.valueOf(cause.getMessage).take(500)
+          val msg = cause match {
+            case t: Harness.Timeout => t.getMessage
+            case _ => s"${cause.getClass.getSimpleName}: " +
+              String.valueOf(cause.getMessage).take(500)
+          }
           failures(name) = msg
           System.err.println(s"[verify] $name failed: $msg")
-      } finally {
-        restoreConfs()
-        // release the frames the lambda pinned for its returned plan
-        // (same hook as Bench — the dump JVM runs all 498 queries)
-        graft.engine.Pins.releaseAll()
-        ()
       }
     }
-    pool.shutdownNow()
-    // Final sweep AFTER the pool is down: a zombie pool thread parked in a
-    // non-interruptible Spark call can register pins after its query's
-    // per-query release ran, and if that was the LAST query those blocks
-    // would survive for the rest of the JVM. Release is recompute-safe
-    // (an unpersisted frame a zombie still references just recomputes),
-    // so sweeping here can only reclaim, never corrupt.
-    graft.engine.Pins.releaseAll()
+    guard.close()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -145,11 +85,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val oracles = only match {
-      case Some(names) => SparkEntry.oracleSql.filter(kv => names(kv._1))
-      case None        => SparkEntry.oracleSql
-    }
-    val json = oracles
+    val json = Harness.selected(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failures

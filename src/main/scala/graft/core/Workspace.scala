@@ -335,6 +335,26 @@ object Workspace {
       if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
       else String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
+    /** The first 50 numeric `label,value` rows of a CSV: lines split on
+      * '\n' with a trailing '\r' stripped, value = last comma-field
+      * trimmed, lines whose value does not parse skipped. Lines are walked
+      * lazily and the walk stops at the 50th row, so a page costs the
+      * same for a million-line file as for a short one. */
+    private def csvRows(csv: String): Seq[(String, Double)] =
+      Iterator.unfold(0) { start =>
+        if (start > csv.length) None
+        else {
+          val nl = csv.indexOf('\n', start)
+          val end = if (nl < 0) csv.length else nl
+          Some((csv.substring(start, end).stripSuffix("\r"), end + 1))
+        }
+      }.flatMap { line =>
+        val cut = line.lastIndexOf(',')
+        if (cut < 0) None
+        else scala.util.Try(line.substring(cut + 1).trim.toDouble)
+          .toOption.map(v => (line.substring(0, cut), v))
+      }.take(50).toList
+
     /** Chart a CSV file's contents: each `label,value` line becomes a
       * bar (value = last comma-field, so labels may contain commas);
       * unparsable lines — headers included — are skipped rather than
@@ -343,15 +363,7 @@ object Workspace {
       * renders a bounded page. A CSV with no numeric rows is an error
       * page (same channel as the four query errors). */
     def chartFromCsv(name: String, csv: String): String = {
-      val rows = csv.split("\n", -1).toSeq
-        .map(_.stripSuffix("\r"))
-        .flatMap { line =>
-          val cut = line.lastIndexOf(',')
-          if (cut < 0) None
-          else scala.util.Try(line.substring(cut + 1).trim.toDouble)
-            .toOption.map(v => (line.substring(0, cut), v))
-        }
-        .take(50)
+      val rows = csvRows(csv)
       if (rows.isEmpty) error(s"No chartable rows in '$name'")
       else barChart(name, rows)
     }
@@ -372,15 +384,7 @@ object Workspace {
       * without embedding a font program).
       */
     def pdfFromCsv(name: String, csv: String): Option[Array[Byte]] = {
-      val rows = csv.split("\n", -1).toSeq
-        .map(_.stripSuffix("\r"))
-        .flatMap { line =>
-          val cut = line.lastIndexOf(',')
-          if (cut < 0) None
-          else scala.util.Try(line.substring(cut + 1).trim.toDouble)
-            .toOption.map(v => (line.substring(0, cut), v))
-        }
-        .take(50)
+      val rows = csvRows(csv)
       if (rows.isEmpty) None else Some(pdfTable(name, rows))
     }
 

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    `orderBy(value).limit(ndv)` bound first. The limit is semantically
   *    a no-op (ndv counted the very frame it bounds) but it makes the
   *    measured bound part of the physical plan — the plan gates
-  *    (QueryCorpusSpec / WindowScan) accept a Window over a Limit, so
+  *    (QueryCorpusSpec) accept a Window over a Limit, so
   *    these queries no longer need a hand-written allowlist entry.
   *  - NDV > ceiling  → [[Dist.globalPrefixSums]]: seeded-sample range
   *    boundaries, pid as a pure column, per-range offsets + pid-keyed

@@ -20,12 +20,15 @@ import org.apache.spark.storage.StorageLevel
   * deterministic (lowest-id centroids, fixed hash permutations), so a
   * cache hit returns bit-for-bit what a rebuild would.
   *
-  * Keying: [[keyFor]] = session UUID + the input frame's canonicalized
-  * logical-plan hash (`Dataset.semanticHash`) + schema + the call's
-  * parameters. The session UUID scopes entries to one SparkSession (a
-  * leaked entry from a stopped session is never returned to a new one);
-  * the semantic hash makes "same table, same lineage" queries share and
-  * lets differently-built frames miss harmlessly. Queries run
+  * Keying: [[keyFor]] = `System.identityHashCode` of the input frame's
+  * SparkSession + its canonicalized logical-plan hash
+  * (`Dataset.semanticHash`) + schema + the call's parameters. The
+  * identity hash scopes entries to one live SparkSession object; it is
+  * not unique over the JVM's life, so a session created after another
+  * was stopped can in principle collide with it and be handed the
+  * stopped session's entry (entries are never evicted). The semantic
+  * hash makes "same table, same lineage" queries share and lets
+  * differently-built frames miss harmlessly. Queries run
   * sequentially under Bench/Verify, so the get/put race is theoretical;
   * if two threads ever do race, both build the same deterministic frame
   * and last-write-wins — identical answers either way.

@@ -4,21 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared SparkSession for the whole test JVM (suites run
   * sequentially — build.sbt pins Test/parallelExecution := false, since
-  * streaming memory-sink query names are session-global).
+  * streaming memory-sink query names are session-global). It is the
+  * harness session, so specs run on the confs Bench and Verify use.
   */
 object SparkFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.engine.Harness.session()
 
   /** Smallest corpus — tests must stay fast. */
   val sfDir = "/root/testdata/sf0.001"

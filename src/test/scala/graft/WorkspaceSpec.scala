@@ -164,6 +164,17 @@ class WorkspaceSpec extends AnyFunSuite {
     // nothing numeric -> the standard error template
     assert(Render.chartFromCsv("x.txt", "just prose\nno numbers")
       .contains("No chartable rows in &#x27;x.txt&#x27;"))
+    // the PDF takes exactly the chart's rows
+    def pdfRows(csv: String): Seq[(String, String)] = {
+      val pdf = new String(Render.pdfFromCsv("p", csv).get,
+        java.nio.charset.StandardCharsets.ISO_8859_1)
+      """Td \((.*?)\) Tj ET BT /F1 10 Tf 420 -?\d+ Td \((.*?)\) Tj""".r
+        .findAllMatchIn(pdf).map(m => (m.group(1), m.group(2))).toSeq
+    }
+    assert(pdfRows("metric,count\r\nrows, loaded,120\nerrors,3\n") ==
+      Seq(("rows, loaded", "120"), ("errors", "3")))
+    assert(pdfRows(big) == (1 to 50).map(i => (s"k$i", s"$i")))
+    assert(Render.pdfFromCsv("x.txt", "just prose\nno numbers").isEmpty)
   }
 
   test("escape matches handlebars-rust on all seven entities") {
