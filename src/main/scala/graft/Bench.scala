@@ -36,7 +36,7 @@ object Bench {
         // is its own warm-up class — without it the first media query
         // pays provider scanning and its median doubles
         "q_mm_wav_decode", "q_mm_png_decode",
-        // SharedArtifacts memo pre-build: otherwise each session-scoped
+        // Session memo (`Pins.memo`) pre-build: otherwise each session
         // index is charged to whichever family member sorts first.
         // Production builds an index once and serves queries from it, so
         // one cheapest consumer per memo family triggers each build
@@ -91,7 +91,7 @@ object Bench {
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     // Block-manager residual AFTER the rep's Pins release: a healthy run
-    // stays at the SharedArtifacts-only baseline; growth is a persist leak.
+    // stays at the session-memo baseline; growth is a persist leak.
     def storageMb(): Double = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum / 1e6
     val startedAt = java.time.Instant.now().toString

@@ -401,7 +401,8 @@ object Workspace {
       val lines =
         s"BT /F1 14 Tf 72 720 Td (${pdfEsc(name)}) Tj ET" +:
           rows.zipWithIndex.map { case ((label, v), i) =>
-            val y = 694 - i * 16
+            // 13 pt pitch: the 50th row sits at y = 57, inside the page
+            val y = 694 - i * 13
             s"BT /F1 10 Tf 72 $y Td (${pdfEsc(label)}) Tj ET " +
               s"BT /F1 10 Tf 420 $y Td (${pdfEsc(num(v))}) Tj ET"
           }

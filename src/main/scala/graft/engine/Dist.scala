@@ -95,19 +95,21 @@ object Dist {
       dt(leadCol) == org.apache.spark.sql.types.LongType,
       s"globalLead: $idCol/$leadCol must be BIGINT — cast upstream")
     val spark = df.sparkSession
-    val passes = df.select(col(valueCol), col(idCol), col(leadCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = passes.count()
-    val boundaries =
-      sampleBoundaries(passes, valueCol, idCol, asc = true, p, n)
-    val pidCol = pidColumn(boundaries, valueCol, idCol, asc = true)
-    // first row (in order) of each non-empty range → its leadCol value
-    val firsts = passes.withColumn("pid", pidCol)
-      .groupBy(col("pid"))
-      .agg(min_by(col(leadCol), struct(col(valueCol), col(idCol)))
-        .as("fv"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    passes.unpersist(blocking = false)
+    val (boundaries, pidCol, firsts) =
+      Pins.scoped(df.select(col(valueCol), col(idCol), col(leadCol))) {
+        passes =>
+          val n = passes.count()
+          val boundaries =
+            sampleBoundaries(passes, valueCol, idCol, asc = true, p, n)
+          val pidCol = pidColumn(boundaries, valueCol, idCol, asc = true)
+          // first row (in order) of each non-empty range → its leadCol
+          val firsts = passes.withColumn("pid", pidCol)
+            .groupBy(col("pid"))
+            .agg(min_by(col(leadCol), struct(col(valueCol), col(idCol)))
+              .as("fv"))
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          (boundaries, pidCol, firsts)
+      }
     val nRanges = boundaries.length + 1
     val nextFirst: Seq[(Int, Option[Long])] = (0 until nRanges).map { k =>
       k -> (k + 1 until nRanges).collectFirst {
@@ -174,23 +176,24 @@ object Dist {
         "cast upstream")
     }
     val spark = df.sparkSession
-    val passes = df.select((valueCol +: idCol +: leadCol +: weightCols)
-        .distinct.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = passes.count()
-    val boundaries =
-      sampleBoundaries(passes, valueCol, idCol, asc = true, p, n)
-    val pidCol = pidColumn(boundaries, valueCol, idCol, asc = true)
     // ONE fused per-range pass: every weight's range total (prefix-sum
     // stitch) AND the range's in-order first leadCol (cross-range lead
     // stitch) from the same aggregation
     val totalAggs = weightCols.map(w => sum(col(w)).as(s"t_$w")) :+
       min_by(col(leadCol), struct(col(valueCol), col(idCol))).as("fv")
-    val rangeRows = passes.withColumn("pid", pidCol)
-      .groupBy(col("pid"))
-      .agg(totalAggs.head, totalAggs.tail: _*)
-      .collect()
-    passes.unpersist(blocking = false)
+    val (boundaries, pidCol, rangeRows) =
+      Pins.scoped(df.select((valueCol +: idCol +: leadCol +: weightCols)
+          .distinct.map(col): _*)) { passes =>
+        val n = passes.count()
+        val boundaries =
+          sampleBoundaries(passes, valueCol, idCol, asc = true, p, n)
+        val pidCol = pidColumn(boundaries, valueCol, idCol, asc = true)
+        val rangeRows = passes.withColumn("pid", pidCol)
+          .groupBy(col("pid"))
+          .agg(totalAggs.head, totalAggs.tail: _*)
+          .collect()
+        (boundaries, pidCol, rangeRows)
+      }
     val nw = weightCols.length
     val totals = rangeRows.map(r => r.getInt(0) ->
       weightCols.indices.map(j => r.getLong(j + 1)).toArray).toMap
@@ -289,22 +292,24 @@ object Dist {
         "cast explicitly upstream")
     }
     val spark = df.sparkSession
-    val passes = df
-      .select((valueCol +: idCol +: weightCols).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = passes.count()
-    val boundaries = sampleBoundaries(passes, valueCol, idCol, asc, p, n)
-    val pidCol = pidColumn(boundaries, valueCol, idCol, asc)
-    val withPid = df.withColumn("pid", pidCol)
     val totalAggs = weightCols.map(w =>
       (if (isSum) sum(col(w)) else min(col(w))).as(s"t_$w"))
-    val totals = passes.withColumn("pid", pidCol).groupBy(col("pid"))
-      .agg(totalAggs.head, totalAggs.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) ->
-        weightCols.indices.map(j => r.getLong(j + 1)).toArray)
-      .toMap
-    passes.unpersist(blocking = false)
+    val (boundaries, pidCol, totals) =
+      Pins.scoped(df.select((valueCol +: idCol +: weightCols).map(col): _*)) {
+        passes =>
+          val n = passes.count()
+          val boundaries =
+            sampleBoundaries(passes, valueCol, idCol, asc, p, n)
+          val pidCol = pidColumn(boundaries, valueCol, idCol, asc)
+          val totals = passes.withColumn("pid", pidCol).groupBy(col("pid"))
+            .agg(totalAggs.head, totalAggs.tail: _*)
+            .collect()
+            .map(r => r.getInt(0) ->
+              weightCols.indices.map(j => r.getLong(j + 1)).toArray)
+            .toMap
+          (boundaries, pidCol, totals)
+      }
+    val withPid = df.withColumn("pid", pidCol)
     val nRanges = boundaries.length + 1
     // exclusive per-range offsets under the op's identity (0 for sum,
     // Long.MaxValue for min) — range 0's offset is the identity element

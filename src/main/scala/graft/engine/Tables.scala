@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *  - Every loader is a plain `spark.read.parquet` on a path, so Catalyst's
   *    data-source V2 pushdown (filters, column pruning, partition pruning on
   *    partitioned layouts) applies unchanged on a real cluster.
-  *  - No `.cache()`/`.collect()` here: loaders return lazy plans only.
+  *  - No caching or `.collect()` here: loaders return lazy plans only.
   *  - `ensureConf` pins only per-session SQL confs that are safe to set at
   *    runtime; cluster sizing (shuffle partitions, AQE) is left to the
   *    session owner (Verify/Bench mains or the user's session).

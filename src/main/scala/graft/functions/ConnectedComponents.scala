@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over a pair list — the consolidation
   * step that turns mined duplicate PAIRS (q_dedup_*) into duplicate
@@ -142,30 +141,29 @@ object ConnectedComponents {
   def minLabelPropagation(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     val c = pairs.columns
     val p = pairs.select(col(c(0)).as("d1"), col(c(1)).as("d2"))
-    val edges = p.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(p.select(col("d2").as("src"), col("d1").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("v"), col("src").as("lbl"))
-      .distinct()
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < maxRounds) {
-      val nbrMin = edges.join(labels, col("src") === col("v"))
-        .groupBy(col("dst")).agg(min(col("lbl")).as("nl"))
-      // eager localCheckpoint, same reason as the star loop: each round's
-      // plan references the previous labels twice, so carried lineage
-      // doubles per round — truncate it, don't just cache it
-      val stepped = labels.join(nbrMin, col("v") === col("dst"), "left")
-        .select(col("v"), col("lbl"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("nxt"))
-        .localCheckpoint(true)
-      changed = stepped.filter(col("nxt") =!= col("lbl")).count()
-      labels = stepped.select(col("v"), col("nxt").as("lbl"))
-      iters += 1
+    graft.engine.Pins.scoped(p.select(col("d1").as("src"), col("d2").as("dst"))
+        .union(p.select(col("d2").as("src"), col("d1").as("dst")))) { edges =>
+      var labels = edges.select(col("src").as("v"), col("src").as("lbl"))
+        .distinct()
+      var changed = 1L
+      var iters = 0
+      while (changed > 0 && iters < maxRounds) {
+        val nbrMin = edges.join(labels, col("src") === col("v"))
+          .groupBy(col("dst")).agg(min(col("lbl")).as("nl"))
+        // eager localCheckpoint, same reason as the star loop: each round's
+        // plan references the previous labels twice, so carried lineage
+        // doubles per round — truncate it, don't just cache it
+        val stepped = labels.join(nbrMin, col("v") === col("dst"), "left")
+          .select(col("v"), col("lbl"),
+            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("nxt"))
+          .localCheckpoint(true)
+        changed = stepped.filter(col("nxt") =!= col("lbl")).count()
+        labels = stepped.select(col("v"), col("nxt").as("lbl"))
+        iters += 1
+      }
+      require(changed == 0,
+        s"dup-graph did not converge in $iters rounds (diameter > cap)")
+      labels
     }
-    require(changed == 0,
-      s"dup-graph did not converge in $iters rounds (diameter > cap)")
-    edges.unpersist()
-    labels
   }
 }

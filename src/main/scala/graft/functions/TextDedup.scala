@@ -153,9 +153,7 @@ object TextDedup {
     // candidate+verify join (~3-4 s at sf0.1). Production keeps its
     // dedup pair table materialized; the bench warms it untimed through
     // q_dup_by_source.
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(docs, "exactJaccardPairs",
-        threshold)) {
+    graft.engine.Pins.memo(docs, "exactJaccardPairs", threshold) {
       exactJaccardPairsUncached(docs, threshold)
     }
   }
@@ -336,13 +334,12 @@ object TextDedup {
     * numPerms-column min aggregate). Factored so the banding-parameter
     * sweep (q_lsh_tuning) can share ONE signature pass across configs. */
   def minHashSignatures(docs: DataFrame, numPerms: Int): DataFrame =
-    // Session-memoized (SharedArtifacts): every LSH family member
+    // Session-memoized: every LSH family member
     // (q_dedup_minhash/q_dedup_recall/q_lsh_tuning/q_dedup_auto at
     // scale) hashes the SAME corpus with the SAME fixed permutations —
     // one signature pass per (docs plan, numPerms) per session, the way
     // a production corpus keeps its signature table materialized.
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(docs, "minhash", numPerms)) {
+    graft.engine.Pins.memo(docs, "minhash", numPerms) {
       docs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"),
@@ -380,8 +377,8 @@ object TextDedup {
   def minHashRecallSweep(docs: DataFrame, numPerms: Int,
                          bandConfigs: Seq[Int],
                          threshold: Double): DataFrame = {
-    // minHashSignatures is already session-memoized + persisted
-    // (SharedArtifacts) — no extra persist needed here
+    // minHashSignatures is already session-memoized + persisted — no
+    // extra persist needed here
     val sigs = minHashSignatures(docs, numPerms)
     val t = tokSets(docs)
     bandConfigs.map { b =>

@@ -123,20 +123,19 @@ object Vectors {
   def ivfIndex2(corpus: org.apache.spark.sql.DataFrame, nlist: Int)
       : Ivf2Index = {
     import org.apache.spark.sql.expressions.Window
-    // Session-memoized (SharedArtifacts): the whole ANN family
+    // Session-memoized: the whole ANN family
     // (q_sim_ivf/q_hard_negatives/q_semdedup/q_ann_recall/q_ivf_balance/
     // q_knn_triangles_ann) searches ONE index — build its tables once
     // per (corpus plan, nlist) per session, as a production deployment
     // would, instead of once per query. Deterministic build (lowest-id
     // centroid sets, fixed tie-breaks), so a hit is bit-identical.
-    val kb = graft.engine.SharedArtifacts.keyFor(corpus, "ivf2", nlist)
     val m1 = math.ceil(math.sqrt(nlist.toDouble)).toInt
-    val l1C = graft.engine.SharedArtifacts.memo(kb + "|l1") {
+    val l1C = graft.engine.Pins.memo(corpus, "ivf2", nlist, "l1") {
       ivfCentroids(corpus, m1)
         .select(col("cid").as("l1"), col("cv").as("l1v"),
           col("cnrm").as("l1nrm"))
     }
-    val fineWithL1 = graft.engine.SharedArtifacts.memo(kb + "|fine") {
+    val fineWithL1 = graft.engine.Pins.memo(corpus, "ivf2", nlist, "fine") {
       val fineC = ivfCentroids(corpus, nlist)
       val wF = Window.partitionBy(col("cid"))
         .orderBy(col("l1sim").desc, col("l1").asc)
@@ -165,9 +164,8 @@ object Vectors {
     // Memoized like the index itself: the corpus-side assignment is the
     // expensive half (n × O(√nlist) dots) and is identical across every
     // family member that assigns the same frame at the same nprobe.
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(pts, "asg2", nprobe,
-        idx.fineWithL1.semanticHash())) {
+    graft.engine.Pins.memo(pts, "asg2", nprobe,
+        idx.fineWithL1.semanticHash()) {
       ivfAssign2SimBuild(pts, idx, nprobe)
     }
 

@@ -682,8 +682,7 @@ object AnalyticsQueries extends QueryPack {
         .select((col("c_custkey") * 2).as("id"))
         .union(Tables.supplier(s, d)
           .select((col("s_suppkey") * 2 + 1).as("id")))
-      val n = graft.engine.SharedArtifacts.memoCount(
-        graft.engine.SharedArtifacts.keyFor(nodes, "tradeNodeCount"))(
+      val n = graft.engine.Pins.memoCount(nodes, "tradeNodeCount")(
         nodes.count())
       val teleport = (15L * prScale) / (100L * n)  // exact: all positive
       var pr = nodes.select(col("id"), lit(prScale / n).as("pr"))
@@ -744,8 +743,7 @@ object AnalyticsQueries extends QueryPack {
       // the seed count is a session-memoized bounded driver scalar (the
       // q_pagerank rationale), folded back as a literal teleport instead
       // of a 1-row crossJoin broadcast per round
-      val ns = graft.engine.SharedArtifacts.memoCount(
-        graft.engine.SharedArtifacts.keyFor(seeds, "tradeSeedCount"))(
+      val ns = graft.engine.Pins.memoCount(seeds, "tradeSeedCount")(
         seeds.count())
       val teleport = (15L * prScale) / (100L * ns)  // exact: all positive
       def base = nodes.join(broadcast(seeds), Seq("id"), "left")
@@ -3638,8 +3636,7 @@ object AnalyticsQueries extends QueryPack {
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
       .distinct()
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(pairs, "tradeEdges"))(pairs)
+    graft.engine.Pins.memo(pairs, "tradeEdges")(pairs)
   }
 
   /** [[tradeEdges]] in the bipartite node encoding the traversal family
@@ -3663,8 +3660,7 @@ object AnalyticsQueries extends QueryPack {
     * bounded scalar over the already-cached memo. */
   private def tradeGraphParts(s: SparkSession, d: String): Int = {
     val e0 = tradeEdges(s, d)
-    val n = graft.engine.SharedArtifacts.memoCount(
-      graft.engine.SharedArtifacts.keyFor(e0, "tradeEdgesCount"))(e0.count())
+    val n = graft.engine.Pins.memoCount(e0, "tradeEdgesCount")(e0.count())
     // 2·n rows × 16 B/row, 64 MB target per partition
     math.max(1L, (2L * n * 16L) / (64L << 20) + 1L).toInt
   }
@@ -3690,8 +3686,7 @@ object AnalyticsQueries extends QueryPack {
   private def tradeAdj(s: SparkSession, d: String): DataFrame = {
     val e0 = tradeEdgesEnc(s, d)
     val nParts = tradeGraphParts(s, d)
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(e0, "tradeAdj", nParts)) {
+    graft.engine.Pins.memo(e0, "tradeAdj", nParts) {
       val edges = e0.union(e0.select(col("dst").as("src"),
           col("src").as("dst")))
         .repartition(nParts, col("src"))
@@ -3712,12 +3707,11 @@ object AnalyticsQueries extends QueryPack {
   private def coEdges(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey"))
-    // session-memoized (SharedArtifacts): five queries (triangles, CN/RA
+    // session-memoized: five queries (triangles, CN/RA
     // and AA link prediction, item recs, clustering coefficient) search
     // the SAME thresholded graph — build it once per session, as a
     // production deployment would materialize its co-occurrence graph
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(li, "coEdges")) {
+    graft.engine.Pins.memo(li, "coEdges") {
       li.groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
         .select(explode(expr(
@@ -3736,8 +3730,7 @@ object AnalyticsQueries extends QueryPack {
     * Row count is Σ_v deg(v)², linear in the thresholded graph. */
   private def coWedges(s: SparkSession, d: String): DataFrame = {
     val e = coEdges(s, d).select(col("p1"), col("p2"))
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(e, "coWedges")) {
+    graft.engine.Pins.memo(e, "coWedges") {
       val adj = e.select(col("p1").as("v"), col("p2").as("nb"))
         .union(e.select(col("p2").as("v"), col("p1").as("nb")))
       val degW = adj.groupBy(col("v")).agg(count(lit(1)).as("dg"))
@@ -3764,8 +3757,7 @@ object AnalyticsQueries extends QueryPack {
     * results are bit-identical to the per-query build. */
   private def coTriangles(s: SparkSession, d: String): DataFrame = {
     val e = coEdges(s, d).select(col("p1"), col("p2"))
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(e, "coTriangles")) {
+    graft.engine.Pins.memo(e, "coTriangles") {
       val deg = e.select(col("p1").as("n")).union(e.select(col("p2")))
         .groupBy(col("n")).agg(count(lit(1)).as("dg"))
       val withDeg = e
@@ -3826,7 +3818,7 @@ object AnalyticsQueries extends QueryPack {
   /** Multi-root bounded BFS distance frame (root, id, dist) over the
     * customer–supplier bipartite graph, shared by q_harmonic_centrality
     * and q_eccentricity — both read the SAME frontier computation, so it
-    * is built once per session (SharedArtifacts memo, the IVF-family
+    * is built once per session (a `Pins.memo`, the IVF-family
     * discipline) instead of once per query. The build eagerly
     * localCheckpoints the final frame (truncating the 3-round lineage,
     * ConnectedComponents' discipline) so the per-build edge persist can
@@ -3841,13 +3833,9 @@ object AnalyticsQueries extends QueryPack {
     * which is the entire point of sampling. */
   private def multiRootBfs(s: SparkSession, d: String): DataFrame = {
     val e0 = tradeEdgesEnc(s, d)  // shared memoized edge list
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(e0, "multiRootBfs",
-        harmonicRoots, bfsHops)) {
-      val edges = e0.union(e0.select(col("dst").as("src"),
-          col("src").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    graft.engine.Pins.memo(e0, "multiRootBfs", harmonicRoots, bfsHops) {
+      graft.engine.Pins.scoped(e0.union(e0.select(col("dst").as("src"),
+          col("src").as("dst")))) { edges =>
         var dist = Tables.customer(s, d)
           .filter(pmod(col("c_custkey"), lit(50)) === 0)
           .orderBy(col("c_custkey")).limit(harmonicRoots)
@@ -3864,9 +3852,9 @@ object AnalyticsQueries extends QueryPack {
         }
         // eager: materializes the frame NOW (while edges is cached) and
         // truncates lineage, so the memoized artifact carries no
-        // reference to the released persist below
+        // reference to the scoped edge persist
         dist.localCheckpoint(true)
-      } finally edges.unpersist(blocking = false)
+      }
     }
   }
 

@@ -79,9 +79,7 @@ object DriftQueries extends QueryPack {
     // serves every drift dashboard from it — the memo is that shape.
     // The frame is exact integers (deterministic), so every consumer's
     // result is bit-identical to a per-query rebuild (oracle-verified).
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(
-        Tables.events(s, d), "cohortCdf")) {
+    graft.engine.Pins.memo(Tables.events(s, d), "cohortCdf") {
       val g = graft.engine.Pins.pin(grouped)
       Dist.globalPrefixSums(g, "vqd", asc = true, idCol = "vq",
           weightCols = Seq("na", "nb"), outCols = Seq("cum_a", "cum_b"),

@@ -32,8 +32,7 @@ object PipelineQueries extends QueryPack {
     val pairs = TextDedup.exactJaccardPairs(
         Tables.documents(s, d).select(col("doc_id"), col("text")), 0.7)
       .select(col("d1"), col("d2"))
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(pairs, "dupLabels")) {
+    graft.engine.Pins.memo(pairs, "dupLabels") {
       ConnectedComponents.largeSmallStar(pairs)
     }
   }

@@ -38,7 +38,7 @@ object TextQueries extends QueryPack {
     * tokenizer-induction family's shared base frame (VERDICT r11 item 4):
     * q_bpe_pairs, q_bpe_train, and q_bpe_apply each previously rebuilt
     * the same explode→groupBy tokenization of the full corpus, tripling
-    * the family's bench cost. One SharedArtifacts memo keyed on the
+    * the family's bench cost. One session memo keyed on the
     * documents frame + an eager localCheckpoint (the train loop's rounds
     * replay lineage — truncated, they run on the VOCAB-bounded frame
     * only). `ct` is the space-interleaved char tokenization BPE merges
@@ -46,8 +46,7 @@ object TextQueries extends QueryPack {
     * its own length contract downstream. */
   private def bpeW0(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    graft.engine.SharedArtifacts.memo(
-      graft.engine.SharedArtifacts.keyFor(docs, "bpeW0")) {
+    graft.engine.Pins.memo(docs, "bpeW0") {
       docs.select(explode(split(norm(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("w")).agg(count(lit(1)).as("n"))

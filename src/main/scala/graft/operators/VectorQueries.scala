@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{QueryPack, SharedArtifacts, Tables}
+import graft.engine.{Pins, QueryPack, Tables}
 import graft.engine.Pins.PinOps
 import graft.functions.Vectors
 
@@ -311,24 +311,16 @@ object VectorQueries extends QueryPack {
     // candidate generator was tried (r8 punch-list #5) and measured: on
     // this near-uniform corpus a missed true neighbor doesn't just drop
     // an edge, it PROMOTES a lower-cosine candidate into the top-3, so
-    // blocked triangle counts diverge from brute force. What the r8
-    // audit actually flagged — the broadcast NLJ of embeddings ×
-    // embeddings feeding one corpus-wide window sort — is fixed
-    // structurally instead: b-vectors are blocked into 256-id ranges,
-    // the a-side replicates per block through a SHUFFLED equi-join on
-    // blk (no broadcast of the corpus, no NLJ node), and top-3 is
-    // two-stage — a per-(a_id, blk) partial top-3 that runs WITHOUT any
-    // extra exchange (the join output is already clustered by blk, which
-    // satisfies the window's (a_id, blk) distribution), then a global
-    // top-3 over the ~3·n/256-per-vertex survivors. The n² dot products
-    // remain (that IS exact kNN — the approximate 100 TB paths are
-    // q_sim_ivf / q_sim_lsh), but no task holds more than one 256-vector
-    // block against a stream of a-rows, the giant window sort is gone,
-    // and parallelism is n/256 tasks instead of the broadcast's
-    // input-split count. The triangle phase scales as written: the kNN
-    // graph has ≤ 2k·n directed edges, every join below is a keyed
-    // equi-join on vertex ids (wedge volume bounded by Σ deg²), and the
-    // per-vertex count is one hash agg.
+    // blocked triangle counts diverge from brute force. The quadratic
+    // step is bounded by its input instead: knnTrianglesExact takes a
+    // deterministic ≤ 256-vector stratified sample, so the n² dot
+    // products are one broadcast cross join of at most 256 × 256 pairs
+    // and one top-3 window per vector, at any corpus size (the
+    // approximate 100 TB path is knnTrianglesAnn / q_sim_ivf). The
+    // triangle phase scales as written: the kNN graph has ≤ 2k·n
+    // directed edges, every join below is a keyed equi-join on vertex
+    // ids (wedge volume bounded by Σ deg²), and the per-vertex count is
+    // one hash agg.
     "q_knn_triangles" -> ((s, d) => knnTrianglesExact(s, d)),
 
     // -- scale-dispatched kNN-triangles (VERDICT r11 item 3) ---------------
@@ -360,8 +352,8 @@ object VectorQueries extends QueryPack {
     * twin exercises the sampling, not just the miner. The full-corpus
     * scale path remains knnTrianglesAnn (recall-gated IVF); error bars
     * for recall readouts derive from the sample size (q_ann_recall_ci).
-    * The 256-vector cap means ONE 256-wide block suffices — no maxId
-    * probe, no block replication. */
+    * The 256-vector cap means one all-pairs cross join suffices — no
+    * maxId probe, no blocking. */
   private def knnTrianglesExact(s: SparkSession, d: String): DataFrame = {
       val mPerStratum = 16
       val ptsAll = emb(s, d).select(col("vec_id").as("id"), col("v"))
@@ -375,27 +367,20 @@ object VectorQueries extends QueryPack {
         .withColumn("srn", row_number().over(wS))
         .filter(col("srn") <= mPerStratum)
         .drop("hk", "srn")
-      val bBlk = pts
-        .select(col("id").as("b_id"), col("v").as("bv"),
-          col("nrm").as("bnrm"))
-        .withColumn("blk", lit(0))
-      val aRep = pts
-        .select(col("id").as("a_id"), col("v").as("av"),
-          col("nrm").as("anrm"))
-        .withColumn("blk", lit(0))
-      val wPart = Window.partitionBy(col("a_id"), col("blk"))
-        .orderBy(col("cos_raw").desc, col("b_id").asc)
+      val b = pts.select(col("id").as("b_id"), col("v").as("bv"),
+        col("nrm").as("bnrm"))
       val wTop = Window.partitionBy(col("a_id"))
         .orderBy(col("cos_raw").desc, col("b_id").asc)
-      val partial = aRep
-        .join(bBlk.hint("shuffle_hash"), "blk")
+      // all pairs of the sample: the broadcast side is ≤ 256 vectors by
+      // construction, whatever the corpus size
+      val edges = pts
+        .select(col("id").as("a_id"), col("v").as("av"),
+          col("nrm").as("anrm"))
+        .crossJoin(broadcast(b))
         .filter(col("a_id") =!= col("b_id"))
-        .select(col("blk"), col("a_id"), col("b_id"),
+        .select(col("a_id"), col("b_id"),
           (Vectors.dot(col("av"), col("bv")) /
             (col("anrm") * col("bnrm"))).as("cos_raw"))
-        .withColumn("prnk", row_number().over(wPart))
-        .filter(col("prnk") <= 3)
-      val edges = partial
         .withColumn("rnk", row_number().over(wTop))
         .filter(col("rnk") <= 3)
         .select(least(col("a_id"), col("b_id")).as("u"),
@@ -447,8 +432,7 @@ object VectorQueries extends QueryPack {
       // probe cids are distinct per query and each candidate sits in
       // exactly one cell, so the cid equi-join emits each (a, b) pair
       // at most once — no candidate dedup needed before the window
-      val edges = SharedArtifacts.memo(
-        SharedArtifacts.keyFor(e, "knnAnnTop3Edges", nlist)) {
+      val edges = Pins.memo(e, "knnAnnTop3Edges", nlist) {
         probes.select(col("id").as("a_id"), col("cid"))
           .join(assign.select(col("id").as("b_id"), col("cid")), "cid")
           .filter(col("a_id") =!= col("b_id"))
@@ -511,8 +495,7 @@ object VectorQueries extends QueryPack {
       // deterministic index artifact exactly like the centroid tables,
       // so it rides the same session memo: built once, persisted, both
       // passes (and later reps) read the cached blocks.
-      val cand = SharedArtifacts.memo(
-        SharedArtifacts.keyFor(e, "dbscanTauPairs", tau, nlist)) {
+      val cand = Pins.memo(e, "dbscanTauPairs", tau, nlist) {
         probes.select(col("id").as("a_id"), col("cid"))
           .join(assign.select(col("id").as("b_id"), col("cid")), "cid")
           .filter(col("a_id") =!= col("b_id"))
@@ -1270,14 +1253,13 @@ object VectorQueries extends QueryPack {
       val base = emb(s, d).withColumn("nrm", Vectors.norm(col("v")))
       val q = base.filter(col("vec_id") === 0)
         .select(col("v").as("qv"), col("nrm").as("qnrm"))
-      val cand = base.filter(col("vec_id") =!= 0)
+      Pins.scoped(base.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .withColumn("rel",
           Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
         .orderBy(col("rel").desc, col("vec_id").asc).limit(20)
         .select(col("vec_id").as("c_id"), col("v"), col("nrm"), col("rel"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      ) { cand =>
         var picks = Vector.empty[(Long, Double, Double)]
         for (_ <- 1 to 5) {
           val selIds = picks.map(_._1)
@@ -1311,7 +1293,7 @@ object VectorQueries extends QueryPack {
             round(col("rel_raw"), 6).as("rel"),
             round(col("mmr_raw"), 6).as("mmr"))
           .orderBy(col("rnk"))
-      } finally cand.unpersist(blocking = false)
+      }
     }),
 
     // -- product quantization: PQ codes for IVF-PQ-style ANN ---------------
@@ -1702,12 +1684,10 @@ object VectorQueries extends QueryPack {
     "q_kcenter_seed" -> ((s, d) => {
       import org.apache.spark.sql.graft.NativeExpressions
       import s.implicits._
-      val pts = Tables.embeddings(s, d)
+      Pins.scoped(Tables.embeddings(s, d)
         .select(col("vec_id"), transform(col("embedding"),
           x => floor((greatest(x.cast("double"), lit(-1.0)) + lit(1.0)) *
-            lit(1000000.0)).cast("long")).as("q"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+            lit(1000000.0)).cast("long")).as("q"))) { pts =>
         val first = pts.orderBy(col("vec_id")).limit(1).collect().head
         var seeds = List((0L, first.getLong(0), 0L))
         var md = pts
@@ -1731,7 +1711,7 @@ object VectorQueries extends QueryPack {
         }
         seeds.toDF("seed_rank", "vec_id", "sel_dist")
           .orderBy(col("seed_rank"))
-      } finally pts.unpersist(blocking = false)
+      }
     })
   )
 

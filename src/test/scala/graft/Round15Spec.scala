@@ -3,44 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-15 additions: the persist-lifecycle gate (VERDICT r14 item 2 —
-  * every query-lambda pin must leave the block manager once the harness
-  * releases it), plus replay specs for the r15 operators.
+/** Round-15 additions: replay specs for the r15 operators (the
+  * persist-lifecycle tests live in PinsSpec).
   */
 class Round15Spec extends AnyFunSuite {
   import SparkFixture.{spark, sfDir}
-
-  test("Pins: block manager returns to baseline after pin-heavy queries") {
-    // Two queries whose lambdas pin frames consumed by the returned lazy
-    // plan (the sweep-line boundary frame; the pagerank adjacency).
-    // Materialize through the same noop write Bench uses, release, and
-    // assert no persistent RDD from the query survives — the exact
-    // leak-accumulation mode the r14 driver artifact's mid-run sick
-    // window pointed at.
-    // Warm the session memos first (r16-opt: q_pagerank rides the
-    // tradeEdges SharedArtifacts memo; r17-opt: the whole fixed-point
-    // family rides the tradeAdj serving-layout memo and q_pagerank no
-    // longer pins anything per query — q_hits, whose two per-query edge
-    // layouts and per-round score frames are pinned, is the pin-heavy
-    // graph representative now). Memo blocks are session-scoped BY
-    // DESIGN — the IVF-index discipline, never released per query — so
-    // they belong in the baseline; the assertion below is about PIN
-    // lifecycle leaks only.
-    SparkEntry.queries("q_pagerank")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    graft.engine.Pins.releaseAll()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Seq("q_concurrency", "q_hits").foreach { q =>
-      SparkEntry.queries(q)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      assert(graft.engine.Pins.pending > 0,
-        s"$q pinned nothing — the pin site regressed to a leaky persist")
-      graft.engine.Pins.releaseAll()
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty,
-        s"$q left persistent RDDs ${leaked.mkString(",")} after release")
-    }
-  }
 
   test("q_stream_state_ttl: TTL state resets per batch, total persists") {
     val rows = SparkEntry.queries("q_stream_state_ttl")(spark, sfDir)
@@ -539,16 +506,5 @@ class Round15Spec extends AnyFunSuite {
     val step = gs(1) - gs(0)
     val mass = rows.map(_.getDouble(2)).sum * step
     assert(mass > 0.05 && mass < 2.0, s"trapezoid mass $mass implausible")
-  }
-
-  test("Pins: releaseAll is idempotent and tolerates lambda-side release") {
-    import graft.engine.Pins
-    val df = spark.range(10).toDF("x")
-    val p = Pins.pin(df)
-    p.count()
-    p.unpersist(blocking = false) // lambda released it eagerly
-    assert(Pins.releaseAll() >= 1) // registry entry still drains, no throw
-    assert(Pins.pending == 0)
-    assert(Pins.releaseAll() == 0)
   }
 }

@@ -164,12 +164,24 @@ class WorkspaceSpec extends AnyFunSuite {
     // nothing numeric -> the standard error template
     assert(Render.chartFromCsv("x.txt", "just prose\nno numbers")
       .contains("No chartable rows in &#x27;x.txt&#x27;"))
-    // the PDF takes exactly the chart's rows
+    // the PDF takes exactly the chart's rows, every one on the page
     def pdfRows(csv: String): Seq[(String, String)] = {
       val pdf = new String(Render.pdfFromCsv("p", csv).get,
         java.nio.charset.StandardCharsets.ISO_8859_1)
-      """Td \((.*?)\) Tj ET BT /F1 10 Tf 420 -?\d+ Td \((.*?)\) Tj""".r
-        .findAllMatchIn(pdf).map(m => (m.group(1), m.group(2))).toSeq
+      val Seq(x0, y0, x1, y1) =
+        """/MediaBox \[(\d+) (\d+) (\d+) (\d+)\]""".r
+          .findFirstMatchIn(pdf).get.subgroups.map(_.toInt)
+      val rows = ("""Tf (-?\d+) (-?\d+) Td \((.*?)\) Tj ET """ +
+        """BT /F1 10 Tf (-?\d+) (-?\d+) Td \((.*?)\) Tj""").r
+        .findAllMatchIn(pdf).toSeq
+      rows.foreach { m =>
+        Seq(1, 4).foreach { g =>
+          val (x, y) = (m.group(g).toInt, m.group(g + 1).toInt)
+          assert(x0 <= x && x <= x1 && y0 <= y && y <= y1,
+            s"row '${m.group(3)}' at ($x, $y) is off the page")
+        }
+      }
+      rows.map(m => (m.group(3), m.group(6)))
     }
     assert(pdfRows("metric,count\r\nrows, loaded,120\nerrors,3\n") ==
       Seq(("rows, loaded", "120"), ("errors", "3")))
