@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Layer A — the reference's implemented surface (SURVEY.md §2.1), as a
@@ -217,9 +217,17 @@ object Workspace {
         Files.createDirectories(dir)
       }
       val newRefs = refs(name) + ("latest" -> id)
-      Files.writeString(wsRoot(name).resolve("refs"),
+      // written aside and renamed over the old file, so a concurrent
+      // resolve reads the old refs or the new ones, never a truncated
+      // file (a plain write keeps the default file mode, which
+      // createTempFile would narrow to owner-only)
+      val refsFile = wsRoot(name).resolve("refs")
+      val tmp = wsRoot(name).resolve(s"refs.${java.util.UUID.randomUUID}.tmp")
+      Files.writeString(tmp,
         newRefs.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }
           .mkString("", "\n", "\n"))
+      Files.move(tmp, refsFile, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
       appendLog(name, id)
       id
     }
@@ -275,15 +283,23 @@ object Workspace {
       * (&amp; &lt; &gt; &quot; &#x27; &#x60; &#x3D; — it also escapes
       * backtick and equals, against attribute-injection without quotes)
       * so rendered pages are byte-identical to the reference's. */
-    private def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '"' => "&quot;"
-      case '\'' => "&#x27;"
-      case '`' => "&#x60;"
-      case '=' => "&#x3D;"
-      case c => c.toString
+    private def esc(s: String): String = {
+      val b = new java.lang.StringBuilder(s.length + 16)
+      var i = 0
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '&' => b.append("&amp;")
+          case '<' => b.append("&lt;")
+          case '>' => b.append("&gt;")
+          case '"' => b.append("&quot;")
+          case '\'' => b.append("&#x27;")
+          case '`' => b.append("&#x60;")
+          case '=' => b.append("&#x3D;")
+          case c => b.append(c)
+        }
+        i += 1
+      }
+      b.toString
     }
     def page(title: String, body: String): String =
       s"<html><head><title>${esc(title)}</title></head><body>$body</body></html>"

@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -32,23 +34,51 @@ import graft.core.Workspace.{Render, SnapshotStore, WorkspacePath}
   *
   * Non-GET methods get 405, matching warp's rejection of `warp::get()`
   * filters; unmatched paths get 404.
+  *
+  * Dispatch: accepted sockets are set TCP_NODELAY (the JDK's
+  * `sun.net.httpserver.nodelay`), so a kept-alive response whose headers
+  * and body go out as two writes is not held back by Nagle's algorithm
+  * until the client's delayed ACK (about 40 ms a request). Exchanges run
+  * on a fixed pool of `availableProcessors` daemon threads named
+  * `graft-http-<n>`, owned by the frontend and ended by [[stop]].
+  * Handlers keep no state between exchanges, so `log` is called from
+  * those threads concurrently: one call per log block.
   */
 final class HttpFrontend(store: SnapshotStore, mount: Path,
                          assetsRoot: Path, log: String => Unit) {
 
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   /** Bound port (after start; pass port=0 for an ephemeral one). */
   def port: Int = server.getAddress.getPort
 
   def start(requestedPort: Int): Unit = {
+    // The JDK reads this property once, when sun.net.httpserver.ServerConfig
+    // is initialized, i.e. at the first HttpServer.create in the JVM: it
+    // must be set before that. This class is the only creator of one.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(requestedPort), 0)
     server.createContext("/", exchange => handle(exchange))
-    server.setExecutor(null) // single-threaded dispatch is plenty here
+    val threads = new AtomicInteger
+    pool = Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors,
+      { r: Runnable =>
+        val t = new Thread(r, s"graft-http-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    server.setExecutor(pool)
     server.start()
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stops the server, then ends the handler pool and waits for it. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(5, TimeUnit.SECONDS)
+    }
+  }
 
   private def handle(ex: HttpExchange): Unit = {
     try {
@@ -131,8 +161,9 @@ final class HttpFrontend(store: SnapshotStore, mount: Path,
       if (store.workspaceExists(name)) store.resolve(name, rawVersion)
       else Left(Workspace.RepoNotFound(name))
     resolved.foreach { id =>
-      log(s"Version: $rawVersion -> Commit: $id")
-      log(provenance(name, rawVersion, rawPath, id))
+      // one call, so blocks of concurrent requests cannot interleave
+      log(s"Version: $rawVersion -> Commit: $id\n" +
+        provenance(name, rawVersion, rawPath, id))
     }
     // `render=chart` upgrades a CSV file hit to the bar-chart template
     // (the README-declared chart surface); directories and errors fall

@@ -1,8 +1,13 @@
 package graft
 
-import java.net.URI
+import java.io.{BufferedInputStream, ByteArrayOutputStream}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +17,8 @@ import graft.web.HttpFrontend
 
 /** Route-level tests for the Layer A HTTP surface (A11/A12/A14): exact
   * bodies for the fixed routes, the text/css asset quirk, all four error
-  * pages, and the provenance log block.
+  * pages, and the provenance log block; then dispatch: kept-alive latency,
+  * concurrent connections, and the handler pool ending at stop.
   */
 class HttpFrontendSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -40,6 +46,40 @@ class HttpFrontendSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = front.stop()
+
+  /** One kept-alive HTTP/1.1 connection on a raw socket, TCP_NODELAY left
+    * at its default (off), reading each response by its Content-length. */
+  private final class Conn(port: Int) extends AutoCloseable {
+    private val sock = new Socket("127.0.0.1", port)
+    private val in = new BufferedInputStream(sock.getInputStream)
+    private val out = sock.getOutputStream
+
+    private def line(): String = {
+      val b = new ByteArrayOutputStream
+      var c = in.read()
+      while (c != '\n' && c >= 0) { if (c != '\r') b.write(c); c = in.read() }
+      b.toString(ISO_8859_1)
+    }
+
+    /** Status and body of one GET. */
+    def get(path: String): (Int, Array[Byte]) = {
+      out.write(s"GET $path HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n"
+        .getBytes(ISO_8859_1))
+      out.flush()
+      val status = line().split(' ')(1).toInt
+      var len = 0
+      var h = line()
+      while (h.nonEmpty) {
+        val i = h.indexOf(':')
+        if (h.substring(0, i).equalsIgnoreCase("Content-length"))
+          len = h.substring(i + 1).trim.toInt
+        h = line()
+      }
+      (status, in.readNBytes(len))
+    }
+
+    def close(): Unit = sock.close()
+  }
 
   private def get(path: String): HttpResponse[String] =
     client.send(
@@ -191,5 +231,66 @@ class HttpFrontendSpec extends AnyFunSuite with BeforeAndAfterAll {
         .POST(HttpRequest.BodyPublishers.noBody()).build(),
       HttpResponse.BodyHandlers.ofString())
     assert(r.statusCode() == 405)
+  }
+
+  test("kept-alive GETs are not held back by Nagle's algorithm") {
+    val conn = new Conn(front.port)
+    try {
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val (status, body) = conn.get("/workspaces/w?path=t.csv")
+        assert(status == 200 && body.nonEmpty)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20, s"median $median ms over ${ms.mkString(", ")}")
+    } finally conn.close()
+  }
+
+  test("concurrent kept-alive connections get the bodies of a sequential pass") {
+    val routes = Seq("/workspaces/w?path=t.csv", "/workspaces/w",
+      "/workspaces/w?path=t.csv&render=chart",
+      "/workspaces/w?path=t.csv&render=pdf")
+    val expected = {
+      val conn = new Conn(front.port)
+      try routes.map(r => r -> conn.get(r)._2).toMap
+      finally conn.close()
+    }
+    val mismatches = new ConcurrentLinkedQueue[String]
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val runs = (0 until 8).map { c =>
+        pool.submit((() => {
+          val conn = new Conn(front.port)
+          try (0 until 50).foreach { i =>
+            val r = routes((c + i) % routes.length)
+            val (status, body) = conn.get(r)
+            if (status != 200 || !java.util.Arrays.equals(body, expected(r)))
+              mismatches.add(s"connection $c request $i $r: status $status")
+          } finally conn.close()
+        }): Runnable)
+      }
+      runs.foreach(_.get(60, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(mismatches.isEmpty, mismatches.asScala.take(5).mkString("; "))
+  }
+
+  test("stop ends every handler thread") {
+    def handlers(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-http-")).toSet
+    val before = handlers() // the suite's own frontend
+    val other = new HttpFrontend(new SnapshotStore(mount), mount, assets,
+      _ => ())
+    other.start(0)
+    val conn = new Conn(other.port)
+    try (1 to 10).foreach(_ => assert(conn.get("/health")._1 == 200))
+    finally conn.close()
+    assert((handlers() -- before).nonEmpty)
+    other.stop()
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(5)
+    while ((handlers() -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert((handlers() -- before).isEmpty,
+      (handlers() -- before).map(_.getName).mkString(", "))
   }
 }

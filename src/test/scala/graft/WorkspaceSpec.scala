@@ -95,6 +95,33 @@ class WorkspaceSpec extends AnyFunSuite {
     assert(items == Seq("", "sub", "sub/n.txt", "t.csv"))
   }
 
+  test("reads at latest never see a half-written refs file while commits land") {
+    val (st, _) = mkStore()
+    @volatile var done = false
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    var reads = 0
+    val reader = new Thread(() => {
+      while (!done) {
+        st.resolve("w", "latest").left.foreach(e => failures.add(e.message))
+        st.query("w", "latest", "t.csv").left.foreach(e => failures.add(e.message))
+        reads += 1
+      }
+    })
+    reader.start()
+    try {
+      var base = "def456"
+      (1 to 200).foreach(i => base = st.commitFile("w", base, "t.csv", s"a,b\n$i,$i\n"))
+    } finally {
+      done = true
+      reader.join()
+    }
+    val failed = failures.size
+    assert(reads > 0)
+    assert(failed == 0, s"of ${2 * reads} reads, e.g. ${failures.peek}")
+    assert(st.query("w", "latest", "t.csv") ==
+      Right(FileResult("t.csv", "a,b\n200,200\n")))
+  }
+
   test("traversal attempts are rewritten, not rejected") {
     val (st, _) = mkStore()
     assert(st.query("w", "v1", "../../t.csv") ==
